@@ -16,7 +16,7 @@ Protocol (commit-marker, decide-by-atomic-link):
 2. CLAIM    — each table txn claims its csn by publishing its manifest
               with a ``group: {dir, id}`` field. Such a manifest is
               INVISIBLE to every reader until the group marker exists
-              (plans/versioned.py resolve_group_status).
+              (plans/commitlog.py, which states the marker format).
 3. DECIDE   — publish ``<group_dir>/<gid>.json`` with status=committed by
               atomic hard-link: the single commit point for the whole
               group — it either exists or it doesn't, exactly like the
@@ -28,8 +28,8 @@ Protocol (commit-marker, decide-by-atomic-link):
 
 Crash safety: a coordinator that dies between CLAIM and DECIDE leaves
 pending manifests; any reader that needs the affected csn window waits
-out ``group_pending_grace_seconds`` and then force-aborts by linking the
-marker itself — first link wins, the decision is immutable, so every
+out the table's persisted ``group_pending_grace_seconds`` and then
+force-aborts by linking the marker itself — first link wins, the decision is immutable, so every
 reader and every future as-of read agrees forever (bounded-pending
 window; the optimistic analog of tran_mgr.rs:108-127 lock-wait timeouts).
 
@@ -49,12 +49,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, types as T
 
 from db_core_spark.config import DEFAULT_CONFIG, EngineConfig
-from db_core_spark.plans.versioned import (
+from db_core_spark.plans.commitlog import (
     ConflictError,
-    Transaction,
-    VersionedTable,
     publish_manifest,
+    resolve_group_status,
 )
+from db_core_spark.plans.versioned import Transaction, VersionedTable
 
 
 class Database:
@@ -232,10 +232,10 @@ class Database:
         staging = os.path.join(parent, f"._staging-db-{uuid.uuid4().hex}")
         try:
             os.makedirs(os.path.join(staging, "_groupcommits"), exist_ok=False)
-            for name in self.table_names():
-                self.table(name).clone(
-                    os.path.join(staging, name), as_of_csn=pins[name]
-                )
+            clones = [
+                self.table(name).clone(os.path.join(staging, name), as_of_csn=pins[name])
+                for name in self.table_names()
+            ]
             # manifests written under staging name staging paths; retarget
             # them to the final location BEFORE publish (staging is private,
             # so the in-place rewrite is single-writer by construction)
@@ -252,19 +252,14 @@ class Database:
                         return dst_pfx + p[len(src_pfx):]
                 return p
 
-            for name in self.table_names():
-                log_dir = os.path.join(staging, name, "_commitlog")
-                for fn in os.listdir(log_dir):
-                    if not fn.endswith(".json") or fn.startswith("_tmp"):
-                        continue
-                    fp = os.path.join(log_dir, fn)
-                    with open(fp) as f:
-                        m = json.load(f)
+            for clone in clones:
+                for _, _, fn in clone.log.names():
+                    m = clone.log.read(fn)
                     if "dir" in m:
                         m["dir"] = retarget(m["dir"])
                     for op in m.get("ops", []):
                         op["dir"] = retarget(op["dir"])
-                    with open(fp, "w") as f:
+                    with open(os.path.join(clone.log.dir, fn), "w") as f:
                         json.dump(m, f)
             os.rename(staging, dst_path)
         except BaseException:
@@ -308,28 +303,26 @@ class Database:
         - COMMITTED -> every member manifest exists (claims all precede the
           marker), so the straddle test is exact: members at csn <= pin and
           members at csn > pin must not BOTH be non-empty."""
-        from db_core_spark.plans.versioned import resolve_group_status
-
         members: dict[str, list[tuple[str, int, float]]] = {}
         groups: dict[str, dict] = {}
         for n in pins:
-            t = self.table(n)
-            for m in t._manifests():
+            for m in self.table(n).log.manifests():
                 g = m.get("group")
                 if g is not None:
                     members.setdefault(g["id"], []).append(
                         (n, m["csn"], m.get("ts", 0.0))
                     )
                     groups[g["id"]] = g
-        grace = self.config.group_pending_grace_seconds
         for gid, mem in members.items():
             # non-blocking peek (wait=False): validation must not sit out a
             # coordinator's grace window — indecision is itself the answer
             # (retry the pin). Resolved once per group at the NEWEST member
             # ts: claims land in sequence, so an older member's ts crossing
             # the deadline must not force-abort a group whose latest claim
-            # is still fresh.
+            # is still fresh; and with the LONGEST member table's grace, so
+            # no member table's own readers would still be waiting.
             newest_ts = max(ts for _, _, ts in mem)
+            grace = max(self.table(n).log.grace for n, _, _ in mem)
             status = resolve_group_status(
                 groups[gid], newest_ts, grace, wait=False
             )
@@ -355,8 +348,7 @@ class Database:
             retain_seconds = self.config.version_retain_seconds
         live: set[str] = set()
         for n in self.table_names():
-            t = self.table(n)
-            for m in t._manifests():
+            for m in self.table(n).log.manifests():
                 g = m.get("group")
                 if g is not None:
                     live.add(g["id"])

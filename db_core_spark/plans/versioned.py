@@ -41,24 +41,30 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, types as T
 
 from db_core_spark.config import DEFAULT_CONFIG, EngineConfig
 from db_core_spark.operators.litframe import literal_frame
+from db_core_spark.plans.commitlog import (
+    CommitLog,
+    ConflictError,
+    SnapshotUnavailableError,
+    checkpoint_name,
+    delta_name,
+    missing_csns,
+    publish_manifest,
+    table_grace,
+    tracked_keys,
+    write_checkpoint_pointer,
+)
 
 META_COLS = ("_csn", "_opseq", "_deleted")
 
 DEFAULT_NUM_BUCKETS = DEFAULT_CONFIG.num_buckets  # sized so a bucket is ~10-50 GB at scale
-
-
-class ConflictError(Exception):
-    """Optimistic write-write conflict: another transaction committed an
-    overlapping write-set after this transaction began. Retry the txn."""
 
 
 class ConflictTimeoutError(ConflictError):
@@ -67,13 +73,6 @@ class ConflictTimeoutError(ConflictError):
     (`wait_for` returning false, /root/reference/src/tran_mgr/
     tran_mgr.rs:108-127). Subclasses ConflictError so existing retry-aware
     callers keep working."""
-
-
-class SnapshotUnavailableError(Exception):
-    """The requested as-of snapshot needs commit history that vacuum has
-    reclaimed (reference: a reader older than the version-store retention
-    window, version_store.rs:264-309). Raised instead of silently returning
-    a partial fold."""
 
 
 def bucket_expr(cols: list[str], num_buckets: int) -> F.Column:
@@ -141,74 +140,6 @@ def _staging_parts(df: DataFrame, num_buckets: int) -> int:
     return num_buckets
 
 
-def publish_manifest(log_dir: str, name: str, manifest: dict) -> bool:
-    """Atomically publish a manifest: write tmp, hard-link to final name.
-    link(2) fails with EEXIST if another writer claimed it — the lock-free
-    csn allocation (mirrors the CAS publish of latest_commit_csn,
-    system/instance.rs:212-219). On object stores this becomes a conditional put."""
-    tmp = os.path.join(log_dir, f"_tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
-    final = os.path.join(log_dir, name)
-    try:
-        os.link(tmp, final)
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.remove(tmp)
-
-
-def resolve_group_status(
-    group: dict, manifest_ts: float, grace: float, wait: bool = True
-) -> str:
-    """Resolve a group-commit marker to 'committed' or 'aborted' — the
-    visibility decision point for multi-table transactions.
-
-    Protocol (see plans/group.py): per-table manifests carrying a `group`
-    field are invisible until `<group.dir>/<group.id>.json` exists; that
-    marker is published by atomic hard-link, first writer wins, and is
-    immutable afterwards — so once decided, every reader (and every future
-    as-of read) sees the same answer forever.
-
-    A still-undecided marker means the coordinator is between its per-table
-    claims and the marker publish — or died there. With ``wait=True``
-    (reads, CDC, conflict checks) we poll until the manifest is `grace`
-    seconds old, then force-abort by publishing the marker ourselves (the
-    optimistic analog of the reference's lock wait timeout,
-    tran_mgr.rs:108-127: a reader never blocks forever on a dead writer).
-    If the coordinator wins the link race at the last moment, its
-    'committed' stands and we honor it.
-
-    ``wait=False`` is the non-blocking peek for callers that can act on
-    indecision itself (snapshot-pin validation retries the pin): within the
-    grace window an undecided marker returns ``'pending'`` immediately and
-    the healthy in-flight group is left untouched; past the window it
-    force-aborts exactly like the waiting form."""
-    path = os.path.join(group["dir"], f"{group['id']}.json")
-    deadline = manifest_ts + grace
-    while True:
-        try:
-            with open(path) as f:
-                return json.load(f)["status"]
-        except (FileNotFoundError, json.JSONDecodeError):
-            pass
-        if time.time() >= deadline:
-            publish_manifest(
-                group["dir"], f"{group['id']}.json",
-                {"status": "aborted", "ts": time.time(), "by": "reader-timeout"},
-            )
-            # read back: the publish may have lost the race to the
-            # coordinator's 'committed' — whichever linked first is truth
-            with open(path) as f:
-                return json.load(f)["status"]
-        if not wait:
-            return "pending"
-        time.sleep(0.05)
-
-
 @dataclass
 class _Op:
     kind: str  # "upsert" | "delete"
@@ -226,9 +157,10 @@ class VersionedTable:
     a concurrent ``vacuum()`` — either folds the COMPLETE set of committed
     ops visible at that csn or raises a loud, typed
     :class:`SnapshotUnavailableError`; it never silently returns a partial
-    fold. Enforced at two layers: (1) ``_committed_ops`` verifies the
-    checkpoint+tail manifest chain covers the pinned csn contiguously and
-    raises if vacuum reclaimed a needed manifest; (2) the scan-side file
+    fold. Enforced at two layers: (1) the commit-log fold plan
+    (``CommitLog.plan``) verifies the checkpoint+tail manifest chain covers
+    the pinned csn contiguously and raises if vacuum reclaimed a needed
+    manifest; (2) the scan-side file
     resolution raises if an op directory named by a still-valid manifest
     vanished mid-scan (reclaimed between planning and execution) instead of
     treating the missing dir as empty. ``vacuum(grace)`` therefore only
@@ -239,16 +171,19 @@ class VersionedTable:
     chain walk + CSN horizon), re-expressed for immutable-file storage.
     """
 
-    MAX_TRACKED_KEYS = DEFAULT_CONFIG.max_tracked_keys  # back-compat alias
-
     def __init__(self, spark: SparkSession, path: str, config: EngineConfig | None = None):
         self.spark = spark
         self.path = path
         self.config = config or DEFAULT_CONFIG
-        self._log_dir = os.path.join(path, "_commitlog")
         self._data_dir = os.path.join(path, "data")
         with open(os.path.join(path, "_meta.json")) as fh:
             meta = json.load(fh)
+        # the grace persisted at create time wins over this process's
+        # config, so every reader of the table resolves groups alike
+        self.log = CommitLog(
+            path, table_grace(meta, DEFAULT_CONFIG.group_pending_grace_seconds)
+        )
+        self._log_dir = self.log.dir
         self.key_cols: list[str] = meta["key_cols"]
         self.schema: T.StructType = T.StructType.fromJson(meta["schema"])
         # 0 = legacy unbucketed layout (round-1 tables); bucketed is default
@@ -300,11 +235,10 @@ class VersionedTable:
                     "schema": schema.jsonValue(),
                     "num_buckets": num_buckets,
                     "bucket_cols": bucket_cols,
-                    # persisted so OTHER readers (the Python DataSource, which
-                    # has no EngineConfig object) resolve pending group
-                    # markers with the SAME grace as the owning table — a
-                    # shorter default there could force-abort a healthy
-                    # in-flight group commit
+                    # every reader (the table API under any config, the
+                    # DataSource with none) resolves pending group markers
+                    # with this grace: a shorter one could force-abort a
+                    # healthy in-flight group commit
                     "group_pending_grace_seconds": config.group_pending_grace_seconds,
                 },
                 f,
@@ -319,47 +253,8 @@ class VersionedTable:
         manifests define state (system/instance.rs:221-304 as a no-op property)."""
         return cls(spark, path, config=config)
 
-    # ------------------------------------------------------------- manifests
-    #
-    # Log-listing cost model (VERDICT r1 item #9): manifest NAMES encode the
-    # csn ({csn:010d}.json / checkpoint-{csn:010d}.json), so sequence
-    # queries (latest_csn, contiguity guards, fold planning) parse names
-    # only; manifest JSONs are opened just for the ops actually folded —
-    # O(commits since checkpoint), not O(all commits). checkpoint() also
-    # publishes a Delta-style _last_checkpoint pointer: on an object store,
-    # where LIST itself is the expensive call, readers start the listing at
-    # the pointer instead of scanning the whole log prefix.
-
-    def _log_names(self) -> list[tuple[int, bool, str]]:
-        """(csn, is_checkpoint, filename) for every published manifest,
-        parsed from names only — no JSON reads."""
-        out = []
-        for name in os.listdir(self._log_dir):
-            if not name.endswith(".json") or name.startswith("_tmp"):
-                continue
-            stem = name[:-5]
-            try:
-                if stem.startswith("checkpoint-"):
-                    out.append((int(stem.split("-", 1)[1]), True, name))
-                elif stem != "_last_checkpoint":
-                    out.append((int(stem), False, name))
-            except ValueError:
-                continue
-        return sorted(out)
-
-    def _read_manifest(self, name: str) -> dict:
-        with open(os.path.join(self._log_dir, name)) as f:
-            return json.load(f)
-
-    def _manifests(self) -> list[dict]:
-        """Full parse of every manifest — maintenance paths only (vacuum,
-        streaming epoch scan); the read/commit hot paths use _log_names +
-        targeted _read_manifest opens."""
-        out = [self._read_manifest(name) for _, _, name in self._log_names()]
-        return sorted(out, key=lambda m: m["csn"])
-
     def latest_csn(self) -> int:
-        return max((csn for csn, _, _ in self._log_names()), default=0)
+        return self.log.latest_csn()
 
     # ---------------------------------------------------------------- writes
 
@@ -422,59 +317,6 @@ class VersionedTable:
 
     # ---------------------------------------------------------------- reads
 
-    def _committed_ops(self, as_of: int | None) -> list[dict]:
-        """(dir, csn, opseq, kind) for every committed op visible at as_of,
-        starting from the newest checkpoint <= as_of (if any).
-
-        Completeness guard: csns are contiguous integers, so a gap between
-        the fold base and the target csn proves vacuum reclaimed history the
-        snapshot needs -> SnapshotUnavailableError, never a silent partial
-        fold (ADVICE r1: pre-vacuum readers must fail loudly).
-
-        IO bound: name-only planning; opens exactly 1 checkpoint manifest +
-        the delta manifests above it — O(commits since checkpoint)."""
-        names = self._log_names()
-        in_scope = [e for e in names if as_of is None or e[0] <= as_of]
-        ckpt = max((e for e in in_scope if e[1]), default=None, key=lambda e: e[0])
-        delta_csns = {c for c, is_ck, _ in in_scope if not is_ck}
-        overall_max = max((c for c, _, _ in names), default=0)
-        hi = min(as_of, overall_max) if as_of is not None else overall_max
-        lo = ckpt[0] if ckpt is not None else 0
-        missing = set(range(lo + 1, hi + 1)) - delta_csns
-        if missing:
-            raise SnapshotUnavailableError(
-                f"snapshot as_of={as_of} needs reclaimed commits {sorted(missing)} "
-                f"(vacuum retention window passed); oldest available fold base is "
-                f"csn {lo}"
-            )
-        ops = []
-        if ckpt is not None:
-            base = self._read_manifest(ckpt[2])
-            ops.append(
-                {"dir": base["dir"], "csn": -1, "opseq": -1, "checkpoint": True,
-                 "buckets": base.get("buckets", 0)}
-            )
-        for csn, is_ck, name in in_scope:
-            if is_ck or csn <= lo:
-                continue
-            m = self._read_manifest(name)
-            if m.get("group") is not None:
-                # multi-table commit: visible iff the group marker says
-                # committed; an aborted group's manifest stays as a
-                # hole-filling empty commit (csn contiguity preserved)
-                status = resolve_group_status(
-                    m["group"], m.get("ts", 0.0),
-                    self.config.group_pending_grace_seconds,
-                )
-                if status != "committed":
-                    continue
-            for op in m["ops"]:
-                ops.append(
-                    {"dir": op["dir"], "csn": m["csn"], "opseq": op["opseq"],
-                     "checkpoint": False, "buckets": op.get("buckets", 0)}
-                )
-        return ops
-
     def _empty(self) -> DataFrame:
         full = T.StructType(
             list(self.schema.fields)
@@ -497,7 +339,7 @@ class VersionedTable:
 
     def _versions(self, as_of: int | None) -> DataFrame:
         """All visible row versions with (_csn,_opseq,_deleted) attached."""
-        ops = self._committed_ops(as_of)
+        ops = self.log.fold(as_of)
         if not ops:
             return self._empty()
         parts = []
@@ -575,8 +417,8 @@ class VersionedTable:
 
             # availability check runs here, driver-side, so vacuum-reclaimed
             # history raises a typed SnapshotUnavailableError (exceptions
-            # inside DataSource planning surface as opaque PythonExceptions)
-            self._committed_ops(as_of_csn)
+            # inside DataSource planning surface wrapped in an AnalysisException)
+            self.log.plan(as_of_csn)
             register_versioned_format(self.spark)
             reader = self.spark.read.format("versioned").option("path", self.path)
             if as_of_csn is not None:
@@ -710,7 +552,7 @@ class VersionedTable:
         csn = self.latest_csn()
         if csn == 0:
             return 0
-        if any(is_ck and c == csn for c, is_ck, _ in self._log_names()):
+        if any(is_ck and c == csn for c, is_ck, _ in self.log.names()):
             # Idempotent: this exact state is already checkpointed. MUST
             # return before touching storage — re-resolving would
             # mode("overwrite") the live checkpoint dir while the lazy scan
@@ -761,16 +603,8 @@ class VersionedTable:
             "type": "checkpoint", "csn": csn, "dir": out_dir, "ts": time.time(),
             "buckets": self.num_buckets,
         }
-        self._publish(f"checkpoint-{csn:010d}.json", manifest)
-        # Delta-style _last_checkpoint pointer (advisory, overwrite-in-place):
-        # object-store readers start their LIST at this csn instead of
-        # scanning the whole log prefix; local readers get the same bound
-        # from name parsing alone. Monotone: only advanced, never required.
-        ptr = os.path.join(self._log_dir, "_last_checkpoint")
-        tmp = ptr + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"csn": csn, "name": f"checkpoint-{csn:010d}.json"}, f)
-        os.replace(tmp, ptr)
+        self.log.publish(checkpoint_name(csn), manifest)
+        write_checkpoint_pointer(self._log_dir, csn)
         return csn
 
     def alter_add_column(self, name: str, data_type: T.DataType) -> None:
@@ -884,7 +718,7 @@ class VersionedTable:
         src_csn = self.latest_csn() if as_of_csn is None else as_of_csn
         # validates contiguity: raises SnapshotUnavailableError if vacuum
         # already reclaimed history this snapshot needs
-        self._committed_ops(src_csn)
+        ckpt, deltas = self.log.plan(src_csn)
 
         os.makedirs(os.path.join(dst_path, "_commitlog"), exist_ok=False)
         dst_data = os.path.join(dst_path, "data")
@@ -923,32 +757,20 @@ class VersionedTable:
                 linked[src_dir] = dst_dir
             return linked[src_dir]
 
-        names = self._log_names()
-        in_scope = [e for e in names if e[0] <= src_csn]
-        ckpt = max((e for e in in_scope if e[1]), default=None, key=lambda e: e[0])
-        lo = ckpt[0] if ckpt is not None else 0
         if ckpt is not None:
-            m = dict(self._read_manifest(ckpt[2]))
+            m = self.log.read(ckpt[2])
             m["dir"] = translate(m["dir"])
             publish_manifest(dst_log, ckpt[2], m)
-            ptr_tmp = os.path.join(dst_log, f"_last_checkpoint.tmp-{uuid.uuid4().hex}")
-            with open(ptr_tmp, "w") as f:
-                json.dump({"csn": ckpt[0], "name": ckpt[2]}, f)
-            os.replace(ptr_tmp, os.path.join(dst_log, "_last_checkpoint"))
-        for csn, is_ck, name in in_scope:
-            if is_ck or csn <= lo:
-                continue
-            m = dict(self._read_manifest(name))
+            write_checkpoint_pointer(dst_log, ckpt[0])
+        for csn, _, name in deltas:
+            m = self.log.read(name)
             if m.get("group") is not None:
-                status = resolve_group_status(
-                    m["group"], m.get("ts", 0.0), self.config.group_pending_grace_seconds
-                )
-                if status == "committed":
+                if self.log.visible(m):
                     m["group"] = None  # frozen: decided markers are immutable
                 else:
                     # hole commit: wrote NOTHING, so its write-set is the
                     # EMPTY list — None means "untracked, conflicts with
-                    # everything" to _check_conflicts and would wrongly
+                    # everything" to the conflict check and would wrongly
                     # abort any clone-side txn whose window spans this csn
                     m = {"csn": csn, "tsn": m.get("tsn"), "ops": [],
                          "write_keys": [], "ts": m.get("ts", time.time())}
@@ -1010,26 +832,25 @@ class VersionedTable:
                 base_csn = int(json.load(f)["fork_csn"])
 
         def changed(t: "VersionedTable") -> set:
-            # completeness guard (the _committed_ops contract: complete fold
-            # or loud error, never a silent partial): every delta csn in
+            # completeness guard (the fold's contract: complete or loud
+            # error, never a silent partial): every delta csn in
             # (base_csn, hi] must still exist — a checkpoint+vacuum that
             # reclaimed mid-window commits would otherwise silently DROP
             # their keys from both the merge set and the conflict check
-            names = t._log_names()
-            delta_csns = {c for c, is_ck, _ in names if not is_ck}
-            hi = max((c for c, _, _ in names), default=0)
-            missing = set(range(base_csn + 1, hi + 1)) - delta_csns
+            names = t.log.names()
+            missing = missing_csns(names, base_csn, max((c for c, _, _ in names), default=0))
             if missing:
                 raise SnapshotUnavailableError(
-                    f"merge_from: commits {sorted(missing)[:10]}... on {t.path} "
+                    f"merge_from: commits {missing[:10]}... on {t.path} "
                     f"were vacuum-reclaimed inside the merge window "
                     f"(base csn {base_csn}); their write-sets are gone, so a "
                     "key-level merge cannot be computed"
                 )
             keys: set = set()
-            for m in t._manifests():
-                if m.get("type") == "checkpoint" or m["csn"] <= base_csn:
+            for csn, is_ck, name in names:
+                if is_ck or csn <= base_csn:
                     continue
+                m = t.log.read(name)
                 wk = m.get("write_keys")
                 if wk is None:
                     raise ConflictError(
@@ -1082,7 +903,7 @@ class VersionedTable:
         # notation, and a miss here silently DROPS a branch change (the
         # unsafe direction — unlike the conflict check, where a collision
         # is merely a spurious conflict). So: collect the branch's distinct
-        # changed keys (bounded by max_tracked_keys — merge already
+        # changed keys (bounded by MAX_TRACKED_KEYS — merge already
         # requires tracked write-sets), str-encode them driver-side exactly
         # like _stage, and join back on the TYPED key values.
         import datetime as _dt  # noqa: PLC0415
@@ -1131,9 +952,9 @@ class VersionedTable:
         (/root/reference/src/system/checkpointer.rs:86-94) widened to a
         DESCRIBE-DETAIL-style report. Pure metadata: one name listing +
         os.walk over the fold set's dirs; no Spark job."""
-        names = self._log_names()
+        names = self.log.names()
         csn = max((c for c, _, _ in names), default=0)
-        ops = self._committed_ops(None) if csn else []
+        ops = self.log.fold(None) if csn else []
         n_files = 0
         total_bytes = 0
         per_bucket: dict[int, int] = {}
@@ -1169,7 +990,7 @@ class VersionedTable:
 
     def deltas_since_checkpoint(self) -> int:
         """Commits above the newest checkpoint — name-parse only, no JSON."""
-        names = self._log_names()
+        names = self.log.names()
         floor = max((c for c, is_ck, _ in names if is_ck), default=0)
         return sum(1 for c, is_ck, _ in names if not is_ck and c > floor)
 
@@ -1214,7 +1035,7 @@ class VersionedTable:
         A version inside the window survives even below the checkpoint
         floor, so any as-of read younger than `retain_seconds` keeps
         working after vacuum; readers needing reclaimed history get a loud
-        SnapshotUnavailableError (see _committed_ops), and an open txn whose
+        SnapshotUnavailableError (see CommitLog.plan), and an open txn whose
         conflict window extends below the reclaim line aborts with
         ConflictError instead of silently losing lost-update protection.
 
@@ -1224,7 +1045,7 @@ class VersionedTable:
         change (pairs with :meth:`stats`)."""
         if retain_seconds is None:
             retain_seconds = self.config.version_retain_seconds
-        manifests = self._manifests()
+        manifests = self.log.manifests()
         cutoff = time.time() - retain_seconds
         removed = 0
         import shutil
@@ -1323,7 +1144,7 @@ class VersionedTable:
             if m.get("type") == "checkpoint":
                 if m["csn"] < floor and not dry_run:
                     shutil.rmtree(m["dir"], ignore_errors=True)
-                    os.remove(os.path.join(self._log_dir, f"checkpoint-{m['csn']:010d}.json"))
+                    os.remove(os.path.join(self._log_dir, checkpoint_name(m["csn"])))
                 continue
             if m["csn"] <= floor:
                 removed += len(m["ops"])
@@ -1331,7 +1152,7 @@ class VersionedTable:
                     continue
                 for op in m["ops"]:
                     shutil.rmtree(op["dir"], ignore_errors=True)
-                os.remove(os.path.join(self._log_dir, f"{m['csn']:010d}.json"))
+                os.remove(os.path.join(self._log_dir, delta_name(m["csn"])))
         if dry_run:
             return removed
         # clean empty tsn= dirs
@@ -1340,11 +1161,6 @@ class VersionedTable:
             if d.startswith("tsn=") and os.path.isdir(p) and not os.listdir(p):
                 os.rmdir(p)
         return removed
-
-    # ------------------------------------------------------------- internals
-
-    def _publish(self, name: str, manifest: dict) -> bool:
-        return publish_manifest(self._log_dir, name, manifest)
 
 
 class Transaction:
@@ -1489,10 +1305,7 @@ class Transaction:
     # --------------------------------------------------------------- commit
 
     def commit(
-        self,
-        max_csn_attempts: int = 50,
-        extra: dict | None = None,
-        capture_preimages: bool | None = None,
+        self, extra: dict | None = None, capture_preimages: bool | None = None
     ) -> int:
         """Write staged files, then claim the next csn by atomic manifest
         publish. Conflict rule: if any manifest in (start_csn, claimed_csn)
@@ -1510,7 +1323,7 @@ class Transaction:
             self._capture_preimages = capture_preimages
         try:
             ops_meta, my_keys = self._stage()
-            csn = self._claim(ops_meta, my_keys, max_csn_attempts, extra)
+            csn = self._claim(ops_meta, my_keys, extra)
         except BaseException:
             # failed commit = nothing published; its staged tsn= files would
             # otherwise sit orphaned until vacuum (rollback() is blocked by
@@ -1550,7 +1363,6 @@ class Transaction:
         state = t.snapshot(as_of_csn=self.start_csn) if capture else None
         kc = t.key_cols
         ops_meta = []
-        my_keys: set[tuple] | None = set()
         for op in self._ops:
             out_dir = os.path.join(t._data_dir, f"tsn={self.tsn}", f"opseq={op.opseq}")
             full = self._full_rows(op).drop("_csn")  # csn attached at read via manifest
@@ -1602,68 +1414,38 @@ class Transaction:
                     ).unionByName(state.join(op_keys, kc, "left_anti"))
                 else:
                     state = state.join(op_keys, kc, "left_anti")
-            if my_keys is not None:
-                # write-set keys come from the FILES JUST WRITTEN (pyarrow
-                # column read, streamed in batches), not from re-executing
-                # op.df — one plan execution per op instead of two, and the
-                # tracked set is exactly what landed on disk even if the
-                # source plan were nondeterministic. Canonical string form:
-                # JSON-safe for any key type and identical on both sides of
-                # the conflict comparison (cross-type str collisions can
-                # only cause a SPURIOUS conflict — the safe direction).
-                import pyarrow.dataset as pads  # noqa: PLC0415
+        # write-set keys come from the FILES JUST WRITTEN (pyarrow column
+        # read, streamed in batches and stopped at the tracking cap), not
+        # from re-executing op.df — one plan execution per op instead of
+        # two, and the tracked set is exactly what landed on disk even if
+        # the source plan were nondeterministic. Canonical string form:
+        # JSON-safe for any key type and identical on both sides of the
+        # conflict comparison (cross-type str collisions can only cause a
+        # SPURIOUS conflict — the safe direction).
+        import pyarrow.dataset as pads  # noqa: PLC0415
 
-                cap = t.config.max_tracked_keys
-                for batch in pads.dataset(out_dir, format="parquet").to_batches(
-                    columns=t.key_cols, batch_size=65536
+        def written_keys():
+            for o in ops_meta:
+                for batch in pads.dataset(o["dir"], format="parquet").to_batches(
+                    columns=kc, batch_size=65536
                 ):
-                    rows = zip(*(batch.column(c).to_pylist() for c in t.key_cols))
-                    my_keys.update(tuple(str(v) for v in r) for r in rows)
-                    if len(my_keys) > cap:
-                        my_keys = None  # degrade: conflicts with anything
-                        break
-        return ops_meta, my_keys
+                    yield from zip(*([str(v) for v in batch.column(c).to_pylist()] for c in kc))
+
+        return ops_meta, tracked_keys(written_keys())
 
     def _claim(
         self,
         ops_meta: list[dict],
         my_keys: set[tuple] | None,
-        max_csn_attempts: int = 50,
         extra: dict | None = None,
         group: dict | None = None,
     ) -> int:
-        """Phase 2 of commit: claim the next csn by atomic manifest publish,
-        conflict-checking the (start_csn, candidate) window on every attempt.
-
-        ``extra`` merges LAST into the manifest, so a caller key colliding
-        with a protocol field would silently overwrite it (a 'csn' in extra
-        corrupts the log's contiguity; an 'ops' breaks every snapshot
-        read). Reserved names are rejected loudly instead — namespace
-        custom metadata (the streaming sink's writer/epoch are fine)."""
-        _RESERVED = {"csn", "tsn", "ops", "write_keys", "ts", "type", "dir", "group"}
-        bad = _RESERVED & set(extra or ())
-        if bad:
-            raise ValueError(
-                f"extra manifest keys {sorted(bad)} collide with protocol "
-                "fields; rename or namespace them"
-            )
-        t = self.table
-        for _ in range(max_csn_attempts):
-            candidate = t.latest_csn() + 1
-            self._check_conflicts(my_keys, upto=candidate)
-            manifest = {
-                "csn": candidate,
-                "tsn": self.tsn,
-                "ops": ops_meta,
-                "write_keys": sorted(my_keys) if my_keys is not None else None,
-                "ts": time.time(),
-                **({"group": group} if group is not None else {}),
-                **(extra or {}),
-            }
-            if t._publish(f"{candidate:010d}.json", manifest):
-                return candidate
-            # lost the race for this csn; re-check conflicts vs the winner
-        raise RuntimeError("could not claim a csn (too much commit contention)")
+        """Phase 2 of commit: claim the next csn by atomic manifest publish
+        (CommitLog.claim), conflict-checking (start_csn, candidate)."""
+        return self.table.log.claim(
+            self.start_csn, self.tsn, ops_meta, my_keys, f"txn {self.tsn}",
+            extra=extra, group=group,
+        )
 
     def rollback(self) -> None:
         """Discard staged files (WAL rollback + version-store restore,
@@ -1700,47 +1482,6 @@ class Transaction:
         return df.withColumn("_opseq", F.lit(op.opseq).cast("long")).withColumn(
             "_csn", F.lit(None).cast("long")
         )
-
-    def _check_conflicts(self, my_keys: set[tuple] | None, upto: int) -> None:
-        names = self.table._log_names()
-        # completeness: every commit in (start_csn, upto) must still have a
-        # manifest, else vacuum reclaimed part of our conflict window and
-        # lost-update detection would be silently one-eyed -> abort loudly
-        # (ADVICE r1: open txn spanning a checkpoint+vacuum)
-        present = {c for c, is_ck, _ in names if not is_ck}
-        missing = set(range(self.start_csn + 1, upto)) - present
-        if missing:
-            raise ConflictError(
-                f"txn {self.tsn}: conflict window (start_csn={self.start_csn}, "
-                f"{upto}) includes vacuum-reclaimed commits {sorted(missing)}; "
-                "cannot verify write-set isolation — retry on a fresh snapshot"
-            )
-        # only manifests inside the window are opened — O(concurrent
-        # commits), not O(log)
-        for csn, is_ck, name in names:
-            if is_ck or csn <= self.start_csn or csn >= upto:
-                continue
-            m = self.table._read_manifest(name)
-            if m.get("group") is not None:
-                # a concurrent multi-table commit only conflicts if its
-                # group actually committed; pending groups are resolved
-                # first (bounded wait + force-abort) so the check is never
-                # one-eyed
-                status = resolve_group_status(
-                    m["group"], m.get("ts", 0.0),
-                    self.table.config.group_pending_grace_seconds,
-                )
-                if status != "committed":
-                    continue
-            theirs = m.get("write_keys")
-            if my_keys is None or theirs is None:
-                raise ConflictError(
-                    f"txn {self.tsn}: concurrent commit csn={m['csn']} with untracked write-set"
-                )
-            if my_keys & {tuple(k) for k in theirs}:
-                raise ConflictError(
-                    f"txn {self.tsn}: write-set overlaps concurrent commit csn={m['csn']}"
-                )
 
     def _check_open(self) -> None:
         if self._done:

@@ -679,7 +679,7 @@ def versioned_commit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.dataset as pads
 
     out = []
-    for m in vt._manifests():
+    for m in vt.log.manifests():
         if m.get("type") == "checkpoint":
             out.append((m["csn"], "checkpoint", 0, 0))
             continue

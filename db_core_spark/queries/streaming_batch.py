@@ -434,7 +434,7 @@ def stream_native_sink_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
     epochs = [
-        m["epoch"] for m in vt._manifests() if m.get("writer") is not None
+        m["epoch"] for m in vt.log.manifests() if m.get("writer") is not None
     ]
     if len(epochs) < 2 or len(set(epochs)) != len(epochs):
         raise AssertionError(f"expected distinct per-batch commits, got {epochs}")
@@ -444,9 +444,9 @@ def stream_native_sink_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     snap = vt.snapshot()
     msg = w.write(iter(snap.limit(5).collect()))
-    before = len(vt._manifests())
+    before = len(vt.log.manifests())
     w.commit([msg], batchId=epochs[0])
-    if len(vt._manifests()) != before:
+    if len(vt.log.manifests()) != before:
         raise AssertionError("replayed epoch published a duplicate manifest")
     return snap.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -537,7 +537,7 @@ def stream_group_sink_database(spark: SparkSession, sf_dir: str) -> DataFrame:
     def epochs(vt):
         return sorted(
             (m["writer"], m["epoch"])
-            for m in vt._manifests()
+            for m in vt.log.manifests()
             if m.get("writer") is not None
         )
 
@@ -664,12 +664,12 @@ def stream_clone_fork_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     epochs = [
         m["epoch"]
-        for m in fork._manifests()
+        for m in fork.log.manifests()
         if m.get("writer") is not None and m["csn"] > fork_csn
     ]
     if len(epochs) < 2 or len(set(epochs)) != len(epochs):
         raise AssertionError(f"expected >=2 distinct stream epochs, got {epochs}")
-    if any(m.get("writer") is not None for m in up._manifests()):
+    if any(m.get("writer") is not None for m in up.log.manifests()):
         raise AssertionError("stream epochs leaked onto the upstream table")
 
     return fork.diff(fork_csn, fork.latest_csn()).select(

@@ -21,6 +21,10 @@ Reference-parity map (citations into /root/reference):
   double-buffered WAL appends), the driver's single `commit()` publishes one
   manifest atomically (flush-on-commit).
 
+Every commit-log decision — the fold plan, group visibility, the conflict
+check and the csn claim — is plans/commitlog.py's, the same code the table
+API runs.
+
 Scale design: the snapshot reader's partitions are key-hash bucket groups
 matching the physical bucket=<b>/ layout: each partition LISTS ONLY its
 buckets' files across ops and resolves versions locally — pruned IO and no
@@ -36,7 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 import uuid
 from dataclasses import dataclass
 from typing import Iterator, Tuple
@@ -52,13 +55,24 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
+from db_core_spark.config import DEFAULT_CONFIG
+from db_core_spark.plans.commitlog import (
+    CommitLog,
+    SnapshotUnavailableError,
+    missing_csns,
+    table_grace,
+    tracked_keys,
+)
+
 META_FIELDS = [
     T.StructField("_csn", T.LongType()),
     T.StructField("_change", T.StringType()),
 ]
 
 
-def _load_meta(path: str) -> tuple[list[str], T.StructType, int, list[str]]:
+def _load_meta(path: str) -> tuple[list[str], T.StructType, int, list[str], CommitLog]:
+    """The table's _meta.json, read once: (key_cols, schema, num_buckets,
+    bucket_cols, commit log with the table's persisted group grace)."""
     with open(os.path.join(path, "_meta.json")) as fh:
         meta = json.load(fh)
     key_cols = meta["key_cols"]
@@ -67,137 +81,7 @@ def _load_meta(path: str) -> tuple[list[str], T.StructType, int, list[str]]:
         T.StructType.fromJson(meta["schema"]),
         meta.get("num_buckets", 0),
         meta.get("bucket_cols", key_cols),
-    )
-
-
-def _log_names(path: str) -> list[tuple[int, bool, str]]:
-    """(csn, is_checkpoint, filename) parsed from commit-log names only —
-    no JSON reads (same bound as VersionedTable._log_names)."""
-    log_dir = os.path.join(path, "_commitlog")
-    out = []
-    for name in os.listdir(log_dir):
-        if not name.endswith(".json") or name.startswith("_tmp"):
-            continue
-        stem = name[:-5]
-        try:
-            if stem.startswith("checkpoint-"):
-                out.append((int(stem.split("-", 1)[1]), True, name))
-            elif stem != "_last_checkpoint":
-                out.append((int(stem), False, name))
-        except ValueError:
-            continue
-    return sorted(out)
-
-
-def _read_manifest(path: str, name: str) -> dict:
-    with open(os.path.join(path, "_commitlog", name)) as f:
-        return json.load(f)
-
-
-def _manifests(path: str) -> list[dict]:
-    out = [_read_manifest(path, name) for _, _, name in _log_names(path)]
-    return sorted(out, key=lambda m: m["csn"])
-
-
-def _committed_ops(path: str, as_of: int | None) -> list[dict]:
-    """(dir, csn, opseq, kind, checkpoint) visible at as_of, starting from
-    the newest checkpoint <= as_of — same resolution as
-    VersionedTable._committed_ops (kept file-format compatible), including
-    the completeness guard: a csn gap between the fold base and the target
-    proves vacuum reclaimed needed history -> error, never a partial fold.
-    IO bound: name-only planning, opens 1 checkpoint + the deltas above it."""
-    names = _log_names(path)
-    in_scope = [e for e in names if as_of is None or e[0] <= as_of]
-    ckpt = max((e for e in in_scope if e[1]), default=None, key=lambda e: e[0])
-    delta_csns = {c for c, is_ck, _ in in_scope if not is_ck}
-    overall_max = max((c for c, _, _ in names), default=0)
-    hi = min(as_of, overall_max) if as_of is not None else overall_max
-    lo = ckpt[0] if ckpt is not None else 0
-    missing = set(range(lo + 1, hi + 1)) - delta_csns
-    if missing:
-        raise RuntimeError(
-            f"snapshot as_of={as_of} needs vacuum-reclaimed commits "
-            f"{sorted(missing)}; oldest available fold base is csn {lo}"
-        )
-    ops = []
-    if ckpt is not None:
-        base = _read_manifest(path, ckpt[2])
-        ops.append(
-            {"dir": base["dir"], "csn": -1, "opseq": -1, "kind": "checkpoint",
-             "checkpoint": True, "buckets": base.get("buckets", 0)}
-        )
-    for csn, is_ck, name in in_scope:
-        if is_ck or csn <= lo:
-            continue
-        m = _read_manifest(path, name)
-        if not _group_visible(m, path):
-            continue
-        for op in m["ops"]:
-            ops.append(
-                {"dir": op["dir"], "csn": m["csn"], "opseq": op["opseq"],
-                 "kind": op["kind"], "checkpoint": False,
-                 "buckets": op.get("buckets", 0)}
-            )
-    return ops
-
-
-import functools
-
-
-def _table_grace(path: str) -> float:
-    """The grace window persisted in the table's _meta.json at create time;
-    falls back to the library default for tables created before the field
-    existed. Reading it here (instead of DEFAULT_CONFIG) keeps DataSource
-    reads from force-aborting a healthy in-flight group commit whose owner
-    configured a LONGER grace than this process's default. Cached per
-    (path, meta mtime) — one stat per call instead of one JSON parse, and
-    a table dropped and recreated at the same path (or a rebucket's meta
-    rewrite) refreshes instead of serving the dead table's value."""
-    from db_core_spark.config import DEFAULT_CONFIG
-
-    meta_path = os.path.join(path, "_meta.json")
-    try:
-        mtime = os.stat(meta_path).st_mtime_ns
-    except OSError:
-        return DEFAULT_CONFIG.group_pending_grace_seconds
-    return _table_grace_at(meta_path, mtime)
-
-
-@functools.lru_cache(maxsize=256)
-def _table_grace_at(meta_path: str, mtime: int) -> float:
-    from db_core_spark.config import DEFAULT_CONFIG
-
-    try:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        return float(
-            meta.get(
-                "group_pending_grace_seconds",
-                DEFAULT_CONFIG.group_pending_grace_seconds,
-            )
-        )
-    except (OSError, ValueError, TypeError):
-        # Malformed/torn meta must degrade to the default grace, not crash
-        # planning (the publish path writes meta tmp+replace, but a reader
-        # can still race a torn NFS view or a hand-edited file).
-        return DEFAULT_CONFIG.group_pending_grace_seconds
-
-
-def _group_visible(manifest: dict, path: str) -> bool:
-    """Multi-table commit visibility: a manifest carrying a `group` field
-    counts only if its group marker resolved to committed (pending groups
-    are force-resolved after the TABLE's configured grace window —
-    plans/versioned.py resolve_group_status). Runs at planning time on the
-    driver, same place VersionedTable's own read path resolves it."""
-    if manifest.get("group") is None:
-        return True
-    from db_core_spark.plans.versioned import resolve_group_status
-
-    return (
-        resolve_group_status(
-            manifest["group"], manifest.get("ts", 0.0), _table_grace(path)
-        )
-        == "committed"
+        CommitLog(path, table_grace(meta, DEFAULT_CONFIG.group_pending_grace_seconds)),
     )
 
 
@@ -306,12 +190,12 @@ class VersionedSnapshotReader(DataSourceReader):
         as_of = options.get("asofcsn")
         self.as_of = int(as_of) if as_of is not None else None
         self.include_meta = str(options.get("includemeta", "false")).lower() == "true"
-        self.key_cols, self.data_schema, self.num_buckets, self.bucket_cols = _load_meta(
-            self.path
-        )
+        (
+            self.key_cols, self.data_schema, self.num_buckets, self.bucket_cols, log
+        ) = _load_meta(self.path)
         key_eq = options.get("keyequals")
         self.key_equals: dict | None = json.loads(key_eq) if key_eq else None
-        self.ops = _committed_ops(self.path, self.as_of)
+        self.ops = log.fold(self.as_of)
         if self.num_buckets > 0:
             if self.key_equals is not None:
                 missing = [c for c in self.bucket_cols if c not in self.key_equals]
@@ -490,7 +374,7 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
 
     def __init__(self, schema: T.StructType, options: dict):
         self.path = options["path"]
-        self.key_cols, self.data_schema, _, _ = _load_meta(self.path)
+        self.key_cols, self.data_schema, _, _, self.log = _load_meta(self.path)
         start = options.get("startingcsn")
         self.start_csn = int(start) if start is not None else 0
         self.include_opseq = (
@@ -501,18 +385,18 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
         return {"csn": self.start_csn}
 
     def latestOffset(self) -> dict:
-        deltas = [c for c, is_ck, _ in _log_names(self.path) if not is_ck]
+        deltas = [c for c, is_ck, _ in self.log.names() if not is_ck]
         return {"csn": max(deltas, default=self.start_csn)}
 
     def partitions(self, start: dict, end: dict) -> list[CDCPartition]:
         lo, hi = start["csn"], end["csn"]
         parts: list[CDCPartition] = []
         # name-bounded: only manifests inside the batch window are opened
-        for csn, is_ck, name in _log_names(self.path):
+        for csn, is_ck, name in self.log.names():
             if is_ck or not (lo < csn <= hi):
                 continue
-            m = _read_manifest(self.path, name)
-            if not _group_visible(m, self.path):
+            m = self.log.read(name)
+            if not self.log.visible(m):
                 continue  # aborted/force-aborted group: no change rows
             for op in m["ops"]:
                 has_pre = bool(op.get("preimages"))
@@ -639,17 +523,22 @@ def _stage_rows(
         pq.write_table(tbl, os.path.join(out_dir, rel))
         rel_paths.append(rel)
     # canonical string form of the part's write-set (same encoding as
-    # Transaction.commit so the writer kinds compare like-for-like); arrow
+    # Transaction._stage so the writer kinds compare like-for-like); arrow
     # to_pylist yields python-native values (datetime, int, str) matching
     # what Spark Rows stringify to on the txn side
-    cap = 100_000  # VersionedTable.MAX_TRACKED_KEYS (no driver-side import here)
-    key_tbl = tbl.select(key_cols)
-    part_keys: list | None = list(
-        {tuple(str(r[c]) for c in key_cols) for r in key_tbl.to_pylist()}
+    part_keys = tracked_keys(
+        tuple(str(r[c]) for c in key_cols) for r in tbl.select(key_cols).to_pylist()
     )
-    if len(part_keys) > cap:
-        part_keys = None
-    return rel_paths, len(rows), part_keys
+    return rel_paths, len(rows), list(part_keys) if part_keys is not None else None
+
+
+def _write_set(messages) -> set | None:
+    """Union of the staged parts' write-sets; None (untracked) if any part
+    or the union passes the tracking cap."""
+    parts = [m for m in messages if m is not None]
+    if any(m.keys is None for m in parts):
+        return None
+    return tracked_keys(tuple(k) for m in parts for k in m.keys)
 
 
 @dataclass
@@ -666,18 +555,18 @@ class VersionedAppendWriter(DataSourceWriter):
     ONE manifest for all of them (group commit, system/instance.rs:102-111). A
     failed job leaves only unpublished files — invisible by construction.
 
-    Conflict protection is symmetric with Transaction (tran_mgr parity):
-    each part enumerates its distinct key set (degrading to 'conflicts with
-    anything' above MAX_TRACKED_KEYS, same rule as Transaction.commit);
-    commit() aborts with ConflictError when any manifest published after the
-    writer was planned overlaps — so two concurrent bulk appends upserting
-    the same keys can no longer both win (no silent last-csn lost update)."""
+    Conflict protection is Transaction's (tran_mgr parity): each part
+    enumerates its distinct key set, and commit() claims through
+    CommitLog.claim, aborting with ConflictError when any manifest
+    published after the writer was planned overlaps, or was reclaimed by
+    vacuum — so two concurrent bulk appends upserting the same keys can no
+    longer both win (no silent last-csn lost update)."""
 
     def __init__(self, schema: T.StructType, options: dict):
         self.path = options["path"]
-        self.key_cols, self.data_schema, self.num_buckets, self.bucket_cols = _load_meta(
-            self.path
-        )
+        (
+            self.key_cols, self.data_schema, self.num_buckets, self.bucket_cols, self.log
+        ) = _load_meta(self.path)
         if [f.name for f in schema.fields] != [f.name for f in self.data_schema.fields]:
             raise ValueError(
                 f"schema mismatch: table has {self.data_schema.fieldNames()}, "
@@ -687,7 +576,7 @@ class VersionedAppendWriter(DataSourceWriter):
         self.op_dir = os.path.join(self.path, "data", f"tsn={self.tsn}", "opseq=0")
         # snapshot pin at plan time: manifests committed after this are
         # 'concurrent' for the optimistic conflict check in commit()
-        self.start_csn = max((c for c, _, _ in _log_names(self.path)), default=0)
+        self.start_csn = self.log.latest_csn()
 
     def write(self, iterator) -> StagedPart:
         rel_paths, n_rows, part_keys = _stage_rows(
@@ -706,58 +595,14 @@ class VersionedAppendWriter(DataSourceWriter):
         return StagedPart(file_path=fname, n_rows=n_rows, keys=part_keys)
 
     def commit(self, messages) -> None:
-        from db_core_spark.plans.versioned import ConflictError, VersionedTable, publish_manifest
-
-        n = sum(m.n_rows for m in messages if m is not None)
-        my_keys: set | None = set()
-        for m in messages:
-            if m is None:
-                continue
-            if m.keys is None:
-                my_keys = None
-                break
-            my_keys.update(tuple(k) for k in m.keys)
-        if my_keys is not None and len(my_keys) > VersionedTable.MAX_TRACKED_KEYS:
-            my_keys = None  # degrade, same rule as Transaction.commit
-        log_dir = os.path.join(self.path, "_commitlog")
-        manifest_ops = [
-            {"dir": self.op_dir, "opseq": 0, "kind": "upsert",
-             "buckets": self.num_buckets}
-        ]
-        for _ in range(50):
-            names = _log_names(self.path)
-            candidate = max((c for c, _, _ in names), default=0) + 1
-            # optimistic conflict check vs everything committed since plan
-            # time (mirrors Transaction._check_conflicts); only manifests
-            # inside the window are opened
-            for csn, is_ck, name in names:
-                if is_ck or not (self.start_csn < csn < candidate):
-                    continue
-                m = _read_manifest(self.path, name)
-                if not _group_visible(m, self.path):
-                    continue  # aborted multi-table commit: nothing to conflict with
-                theirs = m.get("write_keys")
-                if my_keys is None or theirs is None:
-                    raise ConflictError(
-                        f"bulk append {self.tsn}: concurrent commit csn={m['csn']} "
-                        "with untracked write-set"
-                    )
-                if my_keys & {tuple(k) for k in theirs}:
-                    raise ConflictError(
-                        f"bulk append {self.tsn}: write-set overlaps concurrent "
-                        f"commit csn={m['csn']}"
-                    )
-            manifest = {
-                "csn": candidate,
-                "tsn": self.tsn,
-                "ops": manifest_ops,
-                "write_keys": sorted(my_keys) if my_keys is not None else None,
-                "rows": n,
-                "ts": time.time(),
-            }
-            if publish_manifest(log_dir, f"{candidate:010d}.json", manifest):
-                return
-        raise RuntimeError("could not claim a csn (too much commit contention)")
+        self.log.claim(
+            self.start_csn,
+            self.tsn,
+            [{"dir": self.op_dir, "opseq": 0, "kind": "upsert", "buckets": self.num_buckets}],
+            _write_set(messages),
+            f"bulk append {self.tsn}",
+            extra={"rows": sum(m.n_rows for m in messages if m is not None)},
+        )
 
     def abort(self, messages) -> None:
         import shutil
@@ -792,18 +637,15 @@ class VersionedStreamWriter(DataSourceStreamWriter):
     marker plays the recovery-dedup role of the reference's tsn replay
     check (system/instance.rs:221-304).
 
-    Concurrency: optimistic write-set check against manifests committed
-    since this writer's last publish (own manifests skipped), mirroring
-    VersionedAppendWriter.commit; an overlap raises ConflictError and the
-    stream fails loudly rather than losing an update."""
+    Concurrency: CommitLog.claim checks the write-set against manifests
+    committed since this writer's last publish (own manifests skipped); an
+    overlap raises ConflictError and the stream fails loudly rather than
+    losing an update."""
 
     def __init__(self, schema: T.StructType, options: dict):
         self.path = options["path"]
         (
-            self.key_cols,
-            self.data_schema,
-            self.num_buckets,
-            self.bucket_cols,
+            self.key_cols, self.data_schema, self.num_buckets, self.bucket_cols, self.log
         ) = _load_meta(self.path)
         if [f.name for f in schema.fields] != [
             f.name for f in self.data_schema.fields
@@ -858,9 +700,7 @@ class VersionedStreamWriter(DataSourceStreamWriter):
             "_staging",
             hashlib.md5(self.writer_id.encode()).hexdigest()[:16],
         )
-        self.last_seen_csn = max(
-            (c for c, _, _ in _log_names(self.path)), default=0
-        )
+        self.last_seen_csn = self.log.latest_csn()
 
     def write(self, iterator) -> StagedStreamPart:
         rel_paths, n_rows, part_keys = _stage_rows(
@@ -886,25 +726,17 @@ class VersionedStreamWriter(DataSourceStreamWriter):
     def commit(self, messages, batchId: int) -> None:
         import shutil
 
-        from db_core_spark.plans.versioned import (
-            ConflictError,
-            VersionedTable,
-            publish_manifest,
-        )
-
         live = [m for m in messages if m is not None and m.n_rows > 0]
         if not live:
             self._discard(messages)
             return
         # exactly-once: a replayed epoch is already durable — drop the stage
-        for _, _, name in _log_names(self.path):
-            mf = _read_manifest(self.path, name)
-            if (
-                mf.get("writer") == self.writer_id
-                and mf.get("epoch") == batchId
-            ):
-                self._discard(messages)
-                return
+        if any(
+            m.get("writer") == self.writer_id and m.get("epoch") == batchId
+            for m in self.log.manifests()
+        ):
+            self._discard(messages)
+            return
         tsn = f"s{uuid.uuid4().hex[:10]}b{batchId}"
         op_dir = os.path.join(self.path, "data", f"tsn={tsn}", "opseq=0")
         for m in live:
@@ -912,58 +744,20 @@ class VersionedStreamWriter(DataSourceStreamWriter):
                 dest = os.path.join(op_dir, rel)
                 os.makedirs(os.path.dirname(dest), exist_ok=True)
                 os.rename(os.path.join(self.stage_root, rel), dest)
-        n = sum(m.n_rows for m in live)
-        my_keys: set | None = set()
-        for m in live:
-            if m.keys is None:
-                my_keys = None
-                break
-            my_keys.update(tuple(k) for k in m.keys)
-        if my_keys is not None and len(my_keys) > VersionedTable.MAX_TRACKED_KEYS:
-            my_keys = None
-        log_dir = os.path.join(self.path, "_commitlog")
-        for _ in range(50):
-            names = _log_names(self.path)
-            candidate = max((c for c, _, _ in names), default=0) + 1
-            for csn, is_ck, name in names:
-                if is_ck or not (self.last_seen_csn < csn < candidate):
-                    continue
-                mf = _read_manifest(self.path, name)
-                if mf.get("writer") == self.writer_id or not _group_visible(mf, self.path):
-                    continue
-                theirs = mf.get("write_keys")
-                if my_keys is None or theirs is None:
-                    raise ConflictError(
-                        f"stream sink epoch {batchId}: concurrent commit "
-                        f"csn={mf['csn']} with untracked write-set"
-                    )
-                if my_keys & {tuple(k) for k in theirs}:
-                    raise ConflictError(
-                        f"stream sink epoch {batchId}: write-set overlaps "
-                        f"concurrent commit csn={mf['csn']}"
-                    )
-            manifest = {
-                "csn": candidate,
-                "tsn": tsn,
-                "ops": [
-                    {
-                        "dir": op_dir,
-                        "opseq": 0,
-                        "kind": "upsert",
-                        "buckets": self.num_buckets,
-                    }
-                ],
-                "write_keys": sorted(my_keys) if my_keys is not None else None,
-                "rows": n,
+        self.last_seen_csn = self.log.claim(
+            self.last_seen_csn,
+            tsn,
+            [{"dir": op_dir, "opseq": 0, "kind": "upsert", "buckets": self.num_buckets}],
+            _write_set(live),
+            f"stream sink epoch {batchId}",
+            extra={
+                "rows": sum(m.n_rows for m in live),
                 "writer": self.writer_id,
                 "epoch": batchId,
-                "ts": time.time(),
-            }
-            if publish_manifest(log_dir, f"{candidate:010d}.json", manifest):
-                self.last_seen_csn = candidate
-                shutil.rmtree(self.stage_root, ignore_errors=True)
-                return
-        raise RuntimeError("could not claim a csn (too much commit contention)")
+            },
+            skip_writer=self.writer_id,
+        )
+        shutil.rmtree(self.stage_root, ignore_errors=True)
 
     def abort(self, messages, batchId: int) -> None:
         self._discard(messages)
@@ -981,7 +775,7 @@ class VersionedDataSource(DataSource):
         return self.options.get("readchanges", "false").lower()
 
     def schema(self):
-        _, data_schema, _, _ = _load_meta(self.options["path"])
+        data_schema = _load_meta(self.options["path"])[1]
         if self._mode() == "true":
             fields = list(data_schema.fields) + META_FIELDS
             if str(self.options.get("includeopseq", "false")).lower() == "true":
@@ -1039,25 +833,24 @@ class VersionedChangesBatchReader(DataSourceReader):
 
     def __init__(self, schema: T.StructType, options: dict):
         self._delegate = VersionedChangeStreamReader(schema, options)
-        path = options["path"]
         from_csn = int(options.get("fromcsn", 0))
         to = options.get("tocsn")
-        deltas = {c for c, is_ck, _ in _log_names(path) if not is_ck}
+        names = self._delegate.log.names()
         if to is not None:
             to_csn = int(to)
         else:
-            to_csn = max(deltas, default=0)
+            to_csn = max((c for c, is_ck, _ in names if not is_ck), default=0)
         if from_csn > to_csn:
             raise ValueError(f"fromCsn {from_csn} > toCsn {to_csn}")
         # completeness guard (the engine's complete-fold-or-loud-error
         # contract): a vacuum-reclaimed commit inside the requested window
         # would otherwise just be ABSENT from the feed — the consumer sees
         # a silently incomplete ledger, the unsafe direction for CDC
-        missing = set(range(from_csn + 1, to_csn + 1)) - deltas
+        missing = missing_csns(names, from_csn, to_csn)
         if missing:
-            raise RuntimeError(
+            raise SnapshotUnavailableError(
                 f"changes({from_csn}, {to_csn}): commits "
-                f"{sorted(missing)[:10]} were vacuum-reclaimed inside the "
+                f"{missing[:10]} were vacuum-reclaimed inside the "
                 "window; the batch change feed cannot be complete"
             )
         self._window = ({"csn": from_csn}, {"csn": to_csn})

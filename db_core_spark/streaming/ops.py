@@ -288,10 +288,10 @@ def _advance_writer_epoch(table, writer_id: str, cache: dict, durable=None) -> i
     (aborted group claims); decided markers are immutable, so a durable
     verdict is cacheable forever."""
     hi = cache.get("csn", 0)
-    for csn, is_ck, name in table._log_names():
+    for csn, is_ck, name in table.log.names():
         if is_ck or csn <= cache.get("csn", 0):
             continue
-        m = table._read_manifest(name)
+        m = table.log.read(name)
         if (
             m.get("writer") == writer_id
             and m.get("epoch") is not None
@@ -638,17 +638,7 @@ def stream_into_database(events: DataFrame, db, checkpoint_dir: str, split_fn):
     commit, durable by construction) or its group marker resolves to
     'committed'. ConflictError from concurrent writers retries the group
     with fresh staging (the stream does not die)."""
-    from db_core_spark.plans.versioned import (  # noqa: PLC0415
-        ConflictError,
-        resolve_group_status,
-    )
-
-    def _durable(m: dict, grace: float) -> bool:
-        if m.get("group") is None:
-            return True
-        return (
-            resolve_group_status(m["group"], m.get("ts", 0.0), grace) == "committed"
-        )
+    from db_core_spark.plans.versioned import ConflictError  # noqa: PLC0415
 
     epoch_caches: dict[str, dict] = {}  # per-table incremental replay state
 
@@ -657,12 +647,8 @@ def stream_into_database(events: DataFrame, db, checkpoint_dir: str, split_fn):
             return
         for name in db.table_names():
             t = db.table(name)
-            grace = t.config.group_pending_grace_seconds
             max_epoch = _advance_writer_epoch(
-                t,
-                checkpoint_dir,
-                epoch_caches.setdefault(name, {}),
-                durable=lambda m, g=grace: _durable(m, g),
+                t, checkpoint_dir, epoch_caches.setdefault(name, {}), durable=t.log.visible
             )
             if max_epoch is not None and epoch_id <= max_epoch:
                 return  # replayed epoch: already durable atomically

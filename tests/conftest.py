@@ -5,7 +5,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def pytest_collection_modifyitems(config, items):
@@ -34,7 +34,7 @@ SF_MED = "/root/testdata/sf0.01"
 def spark():
     from db_core_spark.session import get_spark
 
-    s = get_spark("tests", cpus=8)
+    s = get_spark("tests")  # local[$SPARK_GRAFT_CPUS]
     yield s
 
 

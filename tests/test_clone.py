@@ -134,9 +134,11 @@ def test_clone_race_with_vacuum_fails_loudly(vt, spark, tmp_path, monkeypatch):
 
     put(spark, vt, [(1, "a", 1.0)])
     put(spark, vt, [(2, "b", 2.0)])
-    ops = vt._committed_ops(None)
+    from db_core_spark.plans.commitlog import CommitLog
+
+    ops = vt.log.fold(None)
     victim = ops[-1]["dir"]
-    real_read = VersionedTable._read_manifest
+    real_read = CommitLog.read
     state = {"fired": False}
 
     def sabotage(self, name):
@@ -147,7 +149,7 @@ def test_clone_race_with_vacuum_fails_loudly(vt, spark, tmp_path, monkeypatch):
             state["fired"] = True
         return m
 
-    monkeypatch.setattr(VersionedTable, "_read_manifest", sabotage)
+    monkeypatch.setattr(CommitLog, "read", sabotage)
     with pytest.raises(SnapshotUnavailableError, match="vacuum"):
         vt.clone(str(tmp_path / "clone"))
 

@@ -540,38 +540,20 @@ def test_batch_changes_refuses_vacuum_reclaimed_window(spark, tmp_path):
         vt.changes(from_csn=0).count()
 
 
-def test_datasource_group_visibility_uses_table_grace(spark, tmp_path):
-    """The DataSource resolves pending group markers with the grace window
-    persisted in the table's _meta.json — NOT this process's default. A
-    reader defaulting to a SHORTER grace would force-abort a healthy
-    in-flight group commit owned by a writer configured with a longer one."""
-    import json
-    import os
-
-    from db_core_spark.config import DEFAULT_CONFIG, EngineConfig
+def _pending_group_db(spark, tmp_path, grace: float):
+    """A Database created with `grace` whose group commit is claimed on
+    tables a and b with the coordinator paused before DECIDE. Returns
+    (db, group txn, the pending manifests of table a)."""
+    from db_core_spark.config import EngineConfig
     from db_core_spark.plans import Database
-    from db_core_spark.sources.versioned_datasource import (
-        _group_visible,
-        _table_grace,
-    )
 
-    patient = EngineConfig(group_pending_grace_seconds=3600.0, num_buckets=4)
-    db = Database.create(spark, str(tmp_path / "gdb"), config=patient)
+    cfg = EngineConfig(group_pending_grace_seconds=grace, num_buckets=4)
+    db = Database.create(spark, str(tmp_path / "gdb"), config=cfg)
     schema = T.StructType(
         [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
     )
     db.create_table("a", key_cols=["k"], schema=schema)
     db.create_table("b", key_cols=["k"], schema=schema)
-    apath = os.path.join(str(tmp_path / "gdb"), "a")
-
-    # grace persisted at create time and read back by the DataSource helper
-    meta = json.load(open(os.path.join(apath, "_meta.json")))
-    assert meta["group_pending_grace_seconds"] == 3600.0
-    # no cache_clear needed: the cache keys on the meta file's mtime, so a
-    # recreated table at the same path can never serve a stale grace
-    assert _table_grace(apath) == 3600.0
-
-    # pending group claimed on both tables; coordinator paused before DECIDE
     g = db.begin()
     g.upsert("a", spark.createDataFrame([(1, "ga")], schema))
     g.upsert("b", spark.createDataFrame([(10, "gb")], schema))
@@ -581,53 +563,111 @@ def test_datasource_group_visibility_uses_table_grace(spark, tmp_path):
         ops_meta, keys = staged[name]
         txn._done = True
         txn._claim(ops_meta, keys, group=group_field)
-
-    pending = [m for m in db.table("a")._manifests() if m.get("group") is not None]
+    pending = [m for m in db.table("a").log.manifests() if m.get("group") is not None]
     assert pending
+    return db, g, pending
+
+
+def test_datasource_group_visibility_uses_table_grace(spark, tmp_path):
+    """The DataSource resolves pending group markers with the grace window
+    persisted in the table's _meta.json — NOT this process's default. A
+    reader defaulting to a SHORTER grace would force-abort a healthy
+    in-flight group commit owned by a writer configured with a longer one."""
+    import json
+    import os
+    import time as _time
+
+    from db_core_spark.config import DEFAULT_CONFIG
+    from db_core_spark.plans.commitlog import publish_manifest, resolve_group_status
+    from db_core_spark.sources.versioned_datasource import _load_meta
+
+    db, g, pending = _pending_group_db(spark, tmp_path, grace=3600.0)
+    apath = os.path.join(db.path, "a")
+
+    # grace persisted at create time and read back with the DataSource meta
+    meta = json.load(open(os.path.join(apath, "_meta.json")))
+    assert meta["group_pending_grace_seconds"] == 3600.0
+    log = _load_meta(apath)[-1]
+    assert log.grace == 3600.0
 
     # The decisive probe: a member manifest OLDER than the process default
     # grace but well inside the table's 3600 s. A reader resolving with
-    # DEFAULT_CONFIG's grace (the pre-fix DataSource behavior) is past the
-    # deadline and would force-abort this healthy in-flight group; with the
-    # table's persisted grace it is still simply pending and untouched.
-    import time as _time
-
-    from db_core_spark.plans.versioned import resolve_group_status
-
+    # DEFAULT_CONFIG's grace is past the deadline and would force-abort
+    # this healthy in-flight group; with the table's persisted grace it is
+    # still simply pending and untouched.
     old_ts = _time.time() - 2 * DEFAULT_CONFIG.group_pending_grace_seconds
     assert DEFAULT_CONFIG.group_pending_grace_seconds < 3600.0
-    status = resolve_group_status(
-        pending[0]["group"], old_ts, _table_grace(apath), wait=False
-    )
+    status = resolve_group_status(pending[0]["group"], old_ts, log.grace, wait=False)
     assert status == "pending"
     assert not os.path.exists(os.path.join(db.group_dir, f"{g.gid}.json"))
 
     # once the coordinator decides, the DataSource sees it (non-blocking:
     # the marker is immutable after publish)
-    from db_core_spark.plans.versioned import publish_manifest
-
     publish_manifest(
         db.group_dir, f"{g.gid}.json", {"status": "committed", "by": "test"}
     )
-    assert _group_visible(pending[0], apath)
+    assert log.visible(pending[0])
+
+
+def test_open_with_default_config_uses_persisted_grace(spark, tmp_path):
+    """One grace rule: a table created with a 3600 s grace and opened with
+    the DEFAULT config (60 s) resolves groups with the persisted 3600 s.
+    A pending member older than the default grace is waited on, not
+    force-aborted, so the coordinator's late 'committed' still lands."""
+    import json
+    import os
+    import threading
+    import time as _time
+
+    from db_core_spark.plans.commitlog import publish_manifest
+
+    db, g, pending = _pending_group_db(spark, tmp_path, grace=3600.0)
+    apath = os.path.join(db.path, "a")
+    # age table a's member past the default grace (and 2x of it)
+    mpath = os.path.join(apath, "_commitlog", f"{pending[0]['csn']:010d}.json")
+    m = json.load(open(mpath))
+    m["ts"] = _time.time() - 120.0
+    os.remove(mpath)
+    json.dump(m, open(mpath, "w"))
+
+    def decide_late():
+        _time.sleep(1.0)
+        publish_manifest(
+            db.group_dir, f"{g.gid}.json", {"status": "committed", "by": "test"}
+        )
+
+    decider = threading.Thread(target=decide_late)
+    decider.start()
+    try:
+        vt = VersionedTable.open(spark, apath)  # default config
+        assert {(r.k, r.v) for r in vt.snapshot().collect()} == {(1, "ga")}
+    finally:
+        decider.join()
+    with open(os.path.join(db.group_dir, f"{g.gid}.json")) as fh:
+        assert json.load(fh)["status"] == "committed"
 
 
 def test_table_grace_survives_malformed_meta(tmp_path):
-    """A torn/hand-edited _meta.json must degrade _table_grace to the
-    process default instead of crashing DataSource planning (ADVICE r5:
-    json.load raised ValueError through the OSError-only catch)."""
+    """A hand-edited _meta.json must degrade the group grace to the process
+    default instead of crashing DataSource planning (ADVICE r5: a
+    non-numeric value raised through an OSError-only catch); a torn one
+    fails loudly at open, never with a silently guessed grace."""
     import os
 
     from db_core_spark.config import DEFAULT_CONFIG
-    from db_core_spark.sources.versioned_datasource import _table_grace
+    from db_core_spark.sources.versioned_datasource import _load_meta
 
+    default = DEFAULT_CONFIG.group_pending_grace_seconds
     tdir = str(tmp_path / "torn")
     os.makedirs(tdir)
+    meta = '{"key_cols": ["k"], "schema": {"type": "struct", "fields": []}%s}'
+    for extra in ("", ', "group_pending_grace_seconds": "soon"',
+                  ', "group_pending_grace_seconds": null'):
+        with open(os.path.join(tdir, "_meta.json"), "w") as fh:
+            fh.write(meta % extra)
+        assert _load_meta(tdir)[-1].grace == default
+
     with open(os.path.join(tdir, "_meta.json"), "w") as fh:
         fh.write('{"key_cols": ["k"], "group_pending_grace_se')  # torn write
-    assert _table_grace(tdir) == DEFAULT_CONFIG.group_pending_grace_seconds
-
-    # non-numeric grace value degrades the same way
-    with open(os.path.join(tdir, "_meta.json"), "w") as fh:
-        fh.write('{"group_pending_grace_seconds": "soon"}')
-    assert _table_grace(tdir) == DEFAULT_CONFIG.group_pending_grace_seconds
+    with pytest.raises(ValueError):
+        _load_meta(tdir)

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F, types as T
 
 from db_core_spark.config import EngineConfig
 from db_core_spark.plans import ConflictError, Database, VersionedTable
-from db_core_spark.plans.versioned import resolve_group_status
+from db_core_spark.plans.commitlog import resolve_group_status
 
 SCHEMA = T.StructType(
     [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
@@ -479,7 +479,7 @@ def test_stream_into_database_atomic_multi_table(spark, tmp_path):
     def epochs(vt):
         return sorted(
             (m["writer"], m["epoch"])
-            for m in vt._manifests()
+            for m in vt.log.manifests()
             if m.get("writer") is not None
         )
 
@@ -490,7 +490,7 @@ def test_stream_into_database_atomic_multi_table(spark, tmp_path):
     # replay: calling the commit path again for an existing epoch is a no-op
     from db_core_spark.streaming.ops import stream_into_database as _sid  # noqa: F401
 
-    before_raw, before_agg = len(raw._manifests()), len(agg._manifests())
+    before_raw, before_agg = len(raw.log.manifests()), len(agg.log.manifests())
     # simulate Structured Streaming re-delivering the first epoch
     batch = want.limit(5)
     writer_id = str(tmp_path / "ck")
@@ -501,11 +501,11 @@ def test_stream_into_database_atomic_multi_table(spark, tmp_path):
 
     hit = any(
         m.get("writer") == writer_id and m.get("epoch") == replay_epoch
-        for m in raw._manifests()
+        for m in raw.log.manifests()
     )
     assert hit  # marker present -> helper returns before any commit
-    assert len(raw._manifests()) == before_raw
-    assert len(agg._manifests()) == before_agg
+    assert len(raw.log.manifests()) == before_raw
+    assert len(agg.log.manifests()) == before_agg
 
 
 def test_database_sql_with_time_travel_pin(spark, tmp_path):
@@ -616,7 +616,7 @@ def test_extra_cannot_shadow_protocol_fields(db, spark):
     g3.upsert("a", rows(spark, (902, "z")))
     csns = g3.commit(extra={"writer": "w", "epoch": 7, "note": "ok"})
     assert csns
-    m = [m for m in db.table("a")._manifests() if m.get("writer") == "w"]
+    m = [m for m in db.table("a").log.manifests() if m.get("writer") == "w"]
     assert m and m[0]["epoch"] == 7
 
 
@@ -681,7 +681,7 @@ def test_database_clone_to_relative_path(db, spark):
     try:
         c = db.clone(rel)
         for name in ("a", "b"):
-            for m in c.table(name)._manifests():
+            for m in c.table(name).log.manifests():
                 for op in m.get("ops", []):
                     assert "._staging-db-" not in op["dir"], op["dir"]
                     assert os.path.isdir(op["dir"]), op["dir"]
@@ -716,11 +716,11 @@ def test_cloned_aborted_group_hole_has_empty_write_set(db, spark, tmp_path):
         g.commit()
 
     src_a = db.table("a")
-    hole_csns = [m["csn"] for m in src_a._manifests() if m.get("group") is not None]
+    hole_csns = [m["csn"] for m in src_a.log.manifests() if m.get("group") is not None]
     assert hole_csns, "expected an aborted-group manifest on table a"
 
     c = src_a.clone(str(tmp_path / "aclone"))
-    holes = [m for m in c._manifests() if not m.get("ops") and m.get("type") != "checkpoint"]
+    holes = [m for m in c.log.manifests() if not m.get("ops") and m.get("type") != "checkpoint"]
     assert holes and all(m.get("write_keys") == [] for m in holes)
 
     # a clone-side txn whose window spans the hole must NOT spuriously abort
@@ -739,7 +739,7 @@ def test_replay_after_group_abort_recommits_not_skips(spark, tmp_path):
     NOT durable and RE-COMMIT the batch — a bare (writer, epoch) match
     would silently drop it forever."""
     import db_core_spark.plans.group as group_mod
-    from db_core_spark.plans.versioned import resolve_group_status
+    from db_core_spark.plans.commitlog import resolve_group_status
     from db_core_spark.streaming.ops import _advance_writer_epoch
 
     db = Database.create(spark, str(tmp_path / "db_replay"), config=FAST)
@@ -863,5 +863,5 @@ def test_database_run_transaction_retries_and_times_out(db, spark):
             d for d in os.listdir(t._data_dir)
             if d.startswith("tsn=") and os.path.isdir(os.path.join(t._data_dir, d))
         }
-        referenced = {"tsn=" + m["tsn"] for m in t._manifests() if m.get("tsn")}
+        referenced = {"tsn=" + m["tsn"] for m in t.log.manifests() if m.get("tsn")}
         assert on_disk == referenced, f"orphaned staging in {name}: {on_disk - referenced}"

@@ -238,7 +238,7 @@ def test_foreachbatch_versioned_sink_commits_per_batch(spark, stream_dir, tmp_pa
     snap = vt.snapshot()
     assert snap.count() == want.count()
     # one commit per (non-empty) micro-batch; staged as 4 files w/ 1/trigger
-    assert len([m for m in vt._manifests() if m.get("type") != "checkpoint"]) >= 2
+    assert len([m for m in vt.log.manifests() if m.get("type") != "checkpoint"]) >= 2
     # spot-check content equality on a aggregate fingerprint
     assert snap.agg(F.sum("value")).first()[0] == pytest.approx(
         want.agg(F.sum("value")).first()[0]
@@ -283,7 +283,7 @@ def test_incremental_rollup_materialization_converges(spark, stream_dir, tmp_pat
     }
     assert got == want
     # incremental: the table saw multiple commits, not one bulk load
-    assert len([m for m in vt._manifests() if m.get("type") != "checkpoint"]) >= 2
+    assert len([m for m in vt.log.manifests() if m.get("type") != "checkpoint"]) >= 2
 
 
 def test_microbatch_replay_is_exactly_once_for_cdc(spark, tmp_path):
@@ -652,7 +652,7 @@ def test_native_stream_writer_exactly_once(spark, stream_dir, tmp_path):
     assert vt.snapshot().count() == want.count()
     epochs = [
         (m["writer"], m["epoch"])
-        for m in vt._manifests()
+        for m in vt.log.manifests()
         if m.get("writer") is not None
     ]
     assert len(epochs) >= 2  # one commit per non-empty micro-batch
@@ -665,15 +665,15 @@ def test_native_stream_writer_exactly_once(spark, stream_dir, tmp_path):
         {"path": vt.path, "checkpointlocation": str(tmp_path / "ck_native")},
     )
     msg = w.write(iter(want.limit(3).collect()))
-    before = len(vt._manifests())
+    before = len(vt.log.manifests())
     w.commit([msg], batchId=epochs[0][1])
-    assert len(vt._manifests()) == before
+    assert len(vt.log.manifests()) == before
     assert vt.snapshot().count() == want.count()
 
     # a NEW epoch through the same path does land, exactly once
     msg2 = w.write(iter(want.limit(2).collect()))
     w.commit([msg2], batchId=max(e for _, e in epochs) + 1000)
-    assert len(vt._manifests()) == before + 1
+    assert len(vt.log.manifests()) == before + 1
     assert vt.snapshot().count() == want.count()  # upsert of existing keys
 
 
@@ -696,10 +696,10 @@ def test_native_stream_writer_abort_discards_stage(spark, stream_dir, tmp_path):
     msg = w.write(iter(batch_events(spark).limit(4).collect()))
     staged = [os.path.join(w.stage_root, rel) for rel in msg.rel_paths]
     assert staged and all(os.path.exists(p) for p in staged)
-    before = len(vt._manifests())
+    before = len(vt.log.manifests())
     w.abort([msg], batchId=0)
     assert not any(os.path.exists(p) for p in staged)
-    assert len(vt._manifests()) == before
+    assert len(vt.log.manifests()) == before
     assert vt.snapshot().count() == 0
 
 
@@ -881,9 +881,9 @@ def test_native_stream_writer_identity_per_checkpoint(spark, tmp_path):
     wb2 = VersionedStreamWriter(
         ev.schema, {"path": vt.path, "checkpointlocation": str(tmp_path / "ckB")}
     )
-    before = len(vt._manifests())
+    before = len(vt.log.manifests())
     wb2.commit([wb2.write(iter(rows[:2]))], batchId=0)
-    assert len(vt._manifests()) == before
+    assert len(vt.log.manifests()) == before
     assert vt.snapshot().count() == 4
 
 
@@ -973,13 +973,13 @@ def test_epoch_replay_check_is_incremental(spark, tmp_path):
         assert commit_microbatch(vt, df, e, "w", cache=cache) is True
 
     reads = {"n": 0}
-    orig = vt._read_manifest
+    orig = vt.log.read
 
     def counting(name):
         reads["n"] += 1
         return orig(name)
 
-    vt._read_manifest = counting
+    vt.log.read = counting
     try:
         # warm cache: only the previous epoch's own manifest is above the
         # watermark; a replay decision costs O(1) reads, not O(commits)
@@ -990,5 +990,5 @@ def test_epoch_replay_check_is_incremental(spark, tmp_path):
         assert commit_microbatch(vt, df, 3, "w") is False
         assert commit_microbatch(vt, df, 2, "w", cache={}) is False
     finally:
-        vt._read_manifest = orig
+        vt.log.read = orig
     assert commit_microbatch(vt, spark.createDataFrame([(4, 40)], schema), 4, "w", cache=cache) is True

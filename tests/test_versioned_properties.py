@@ -1129,17 +1129,17 @@ def test_crash_points_never_corrupt_or_leak(spark, tmp_path_factory, script):
             # this step must not add to expected_orphans
             t = vt.begin()
             apply_ops(t, dict(model), step[1])
-            original = vt._publish
+            original = vt.log.publish
 
             def _boom(name, manifest):
                 raise OSError("injected crash during manifest publish")
 
-            vt._publish = _boom
+            vt.log.publish = _boom
             try:
                 with pytest.raises(OSError, match="injected crash"):
                     t.commit()
             finally:
-                vt._publish = original
+                vt.log.publish = original
         elif step[0] == "conflict_retry":
             # two writers pinned at the SAME snapshot race on shared key k:
             # the loser's commit raises ConflictError, leaks no staging, and
@@ -1176,7 +1176,7 @@ def test_crash_points_never_corrupt_or_leak(spark, tmp_path_factory, script):
             d for d in _os.listdir(vt._data_dir)
             if d.startswith("tsn=") and _os.path.isdir(_os.path.join(vt._data_dir, d))
         }
-        referenced = {"tsn=" + m["tsn"] for m in vt._manifests() if m.get("tsn")}
+        referenced = {"tsn=" + m["tsn"] for m in vt.log.manifests() if m.get("tsn")}
         leaked = on_disk - referenced - expected_orphans
         assert not leaked, f"leaked staging {leaked} after {step!r}"
 
@@ -1350,7 +1350,7 @@ def test_stream_sink_is_exactly_once_under_replay_and_restart(
 
     # exactly one manifest per distinct epoch for this writer
     published = [
-        m["epoch"] for m in vt._manifests() if m.get("writer") == W
+        m["epoch"] for m in vt.log.manifests() if m.get("writer") == W
     ]
     assert sorted(published) == committed, (
         f"manifest multiplicity wrong: {sorted(published)} vs {committed}"
@@ -1475,14 +1475,14 @@ def test_group_crash_points_never_tear_atomicity(spark, tmp_path_factory, steps)
                     group_mod.publish_manifest = real_publish
             else:  # crash_mid_claim: table b's claim dies AND no marker lands
                 tb = g.txn("b")
-                orig_pub = tb.table._publish
-                tb.table._publish = lambda n, m: _boom()
+                orig_pub = tb.table.log.publish
+                tb.table.log.publish = lambda n, m: _boom()
                 group_mod.publish_manifest = _boom
                 try:
                     with pytest.raises(OSError, match="injected"):
                         g.commit()
                 finally:
-                    tb.table._publish = orig_pub
+                    tb.table.log.publish = orig_pub
                     group_mod.publish_manifest = real_publish
         # atomicity invariant after EVERY step: reads (which force-abort
         # undecided groups past the 0.2 s grace) equal the model on BOTH
@@ -1501,7 +1501,7 @@ def test_group_crash_points_never_tear_atomicity(spark, tmp_path_factory, steps)
                 d for d in _os.listdir(t._data_dir)
                 if d.startswith("tsn=") and _os.path.isdir(_os.path.join(t._data_dir, d))
             }
-            referenced = {"tsn=" + m["tsn"] for m in t._manifests() if m.get("tsn")}
+            referenced = {"tsn=" + m["tsn"] for m in t.log.manifests() if m.get("tsn")}
             assert on_disk <= referenced, (
                 f"table {name} leaked staging {on_disk - referenced} after {step!r}"
             )
@@ -1631,7 +1631,7 @@ def test_rebucket_crash_points_are_invisible(spark, tmp_path_factory, script):
             # later real checkpoint at this csn must overwrite it cleanly
             csn = vt.latest_csn()
             if csn > 0 and not any(
-                is_ck and c == csn for c, is_ck, _ in vt._log_names()
+                is_ck and c == csn for c, is_ck, _ in vt.log.names()
             ):
                 d = _os.path.join(vt._data_dir, f"checkpoint-{csn:010d}")
                 _os.makedirs(d, exist_ok=True)
